@@ -206,29 +206,10 @@ def test_simhash_band_plan_shapes():
     assert width == 2 and len(combos) == 32     # single-band fallback
 
 
-def test_simhash_band_plan_adapts_to_corpus_size():
-    """r4: below _SIMHASH_SMALL_N the plan stays at single-band tables
-    (8 × 8-bit keys — lossless for h ≤ 7, 3.5× fewer banding rows);
-    above, the Manku pair-tables return.  Unknown size keeps the
-    at-scale plan."""
-    from webpeel_spark.operators.dedup import (_SIMHASH_SMALL_N,
-                                               _simhash_band_plan)
-
-    width, combos = _simhash_band_plan(6, n_docs=_SIMHASH_SMALL_N)
-    assert (width, len(combos)) == (8, 8)
-    assert all(len(c) == 1 for c in combos)
-
-    width, combos = _simhash_band_plan(6, n_docs=_SIMHASH_SMALL_N + 1)
-    assert (width, len(combos)) == (8, 28)
-
-    width, combos = _simhash_band_plan(6, n_docs=None)
-    assert (width, len(combos)) == (8, 28)
-
-
 def test_simhash_regimes_agree(spark, monkeypatch):
-    """The single-band and pair-table regimes must return the SAME
-    pair set — exactness is the invariant the adaptive switch may not
-    touch.  Force each regime via the threshold constant."""
+    """The single-band and pair-table band plans must return the SAME
+    pair set — both are pigeonhole-exact, so exactness may not depend
+    on which one runs.  Force the single-band plan via ``max_r=1``."""
     import webpeel_spark.operators.dedup as dedup
 
     rows = [(i, f"planted simhash doc {i % 7} body words " * 6)
@@ -241,10 +222,12 @@ def test_simhash_regimes_agree(spark, monkeypatch):
             for r in dedup.simhash_near_duplicates(
                 df, max_hamming=6).collect())
 
-    monkeypatch.setattr(dedup, "_SIMHASH_SMALL_N", 10**9)
-    small_plan = run()
-    monkeypatch.setattr(dedup, "_SIMHASH_SMALL_N", 0)
     large_plan = run()
+    plan = dedup._simhash_band_plan
+    monkeypatch.setattr(dedup, "_simhash_band_plan",
+                        lambda h: plan(h, max_r=1))
+    assert len(dedup._simhash_band_plan(6)[1]) == 8
+    small_plan = run()
     assert small_plan == large_plan and len(small_plan) > 0
 
 

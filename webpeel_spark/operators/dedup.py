@@ -7,14 +7,22 @@ Four families, all designed for 100 TB scale:
                    verified Jaccard.  Signatures and bands are built
                    with builtin Catalyst expressions (xxhash64,
                    transform, array_min, slice) — fully JVM-side, no
-                   Python in the hot path.  The only shuffles are the
-                   band-bucket groupBy and the verify join;
+                   Python in the hot path;
 * SimHash        — 64-bit signature via a vectorized numpy pandas_udf
                    (bit-counting is not expressible efficiently in
                    Catalyst); near-dups = signatures at Hamming
                    distance ≤ t found by banding the 64 bits;
-* n-gram Jaccard — exact pairwise verification used by both families
-                   (array_intersect/array_union sizes).
+* n-gram Jaccard — exact pairwise verification via an inverted
+                   shingle index.
+
+The two LSH operators share one pair plan, run as a single Spark query
+per call: the exact-dup collapse exchange (md5), one windowed exchange
+that sizes, caps and self-joins the band buckets with the verify
+predicate applied map-side, the pair-dedupe exchange, and the
+re-expansion's three joins against one dup-member map (one broadcast
+when it is small).  At thousands of documents stage dispatch, not row
+work, sets these operators' wall time, so the plan keeps that exchange
+count small and fixed.
 
 The reference engine has no corpus-level dedup (its JS ``Set`` dedups
 links per page, metadata.ts:253) — these operators are the scale
@@ -186,58 +194,69 @@ def capped_bucket_pairs(keyed: DataFrame, key_cols: List[str],
     all-pairs array expression — OOMs one reducer on a degenerate
     bucket (mass-duplicated boilerplate is the NORM in Common Crawl:
     cookie walls, 404 templates).  Here no per-bucket array ever
-    materializes:
+    materializes, and sizing, capping and pairing share ONE exchange
+    (the pair dedupe is the only other):
 
-    1. bucket sizes via a count agg (map-side combine, bytes per
-       bucket, skew-proof);
+    1. ``count(1) OVER (PARTITION BY key_cols)`` sizes every bucket
+       in the window's own hash partitioning;
     2. buckets with 1 member (no pair) or > ``bucket_cap`` members
-       (degenerate) are dropped — the drop is REPORTED, never silent:
-       pass ``metrics`` to get dropped-bucket count/max size;
-    3. surviving rows self-join on the keys — each bucket contributes
-       ≤ cap² rows, so the join output is bounded by buckets × cap².
+       (degenerate) are filtered out — the drop is REPORTED, never
+       silent: pass ``metrics`` to get dropped-bucket count/rows/max
+       size, filled before return by one extra action (the only one);
+    3. the surviving rows self-join on the keys as a sort-merge join
+       that reuses the window's partitioning and sort (no second
+       exchange) — each bucket contributes ≤ cap² rows, so the join
+       output is bounded by buckets × cap².
+
+    Every exchange is a Spark job with a fixed dispatch cost that, at
+    thousands of documents, outweighs its rows; sizing buckets with a
+    count agg joined back to the keys costs about four more.  The window
+    trades that agg's map-side combine for streaming each bucket through
+    one task: a degenerate bucket is spill-backed rows in one slow task,
+    not an OOM (the same trade exact_duplicate_groups makes).
 
     Returns (id_a, id_b) distinct with id_a < id_b, plus ``extra_cols``
     from each side suffixed _a/_b.
 
-    ``pair_filter`` (r11, guide §2.3 — shuffle fewer bytes): a
-    deterministic per-pair predicate over id/extra columns, applied to
-    the raw self-join output BEFORE the pair-dedupe exchange.  For a
-    verify predicate that needs only carried scalars (simhash's
-    ``bit_count(xor) <= h``), this moves verification map-side: only
-    true pairs reach the dedupe shuffle.  Measured at sf1.0 the
-    simhash banding emits 87.2M raw candidate rows that dedupe to
-    646k verified pairs — filtering first shuffles ~13M rows instead
-    of 87M.  ``filter ∘ distinct ≡ distinct ∘ filter`` for a
-    deterministic per-row predicate, so results are identical.
+    ``pair_filter``: a deterministic per-pair predicate over id/extra
+    columns, applied to the raw self-join output BEFORE the
+    pair-dedupe exchange.  For a verify predicate that needs only
+    carried columns (simhash's ``bit_count(xor) <= h``, minhash's
+    shingle Jaccard), verification runs map-side and only true pairs
+    reach the dedupe shuffle.  ``filter ∘ distinct ≡ distinct ∘
+    filter`` for a deterministic per-row predicate, so results are
+    identical.
 
-    ``pair_project`` (r11): aliased columns computed from the raw join
-    row (ids + extras) that REPLACE the ``extra_cols`` in the output,
-    evaluated before the dedupe exchange.  Lets a caller shuffle a
-    derived scalar (simhash's 4-byte hamming) instead of the inputs it
-    derives from (two 8-byte signatures) — guide §2.3, narrower rows
-    through the exchange.  Deterministic projections only: the value
+    ``pair_project``: aliased columns computed from the raw join row
+    (ids + extras) that REPLACE the ``extra_cols`` in the output,
+    evaluated before the dedupe exchange, so a derived scalar (the
+    hamming distance, the jaccard) rides the exchange instead of the
+    inputs it derives from.  Deterministic projections only: the value
     must be a function of the pair so the arbitrary dedupe survivor is
     well-defined.
     """
+    from pyspark.sql import Window
+
     extra = extra_cols or []
-    sizes = keyed.groupBy(*key_cols).agg(F.count("*").alias("__n"))
+    sized = keyed.withColumn(
+        "__n", F.count(F.lit(1)).over(Window.partitionBy(*key_cols)))
     if metrics is not None:
-        over = sizes.filter(F.col("__n") > bucket_cap).agg(
-            F.count("*").alias("dropped_buckets"),
-            F.sum("__n").alias("dropped_rows"),
+        over = sized.filter(F.col("__n") > bucket_cap).agg(
+            F.count_distinct(F.struct(*key_cols)).alias("dropped_buckets"),
+            F.count(F.lit(1)).alias("dropped_rows"),
             F.max("__n").alias("max_bucket_size"),
         ).first()
         metrics["dropped_buckets"] = over["dropped_buckets"] or 0
         metrics["dropped_rows"] = over["dropped_rows"] or 0
         metrics["max_dropped_bucket"] = over["max_bucket_size"] or 0
-    eligible = sizes.filter((F.col("__n") > 1) & (F.col("__n") <= bucket_cap)) \
-                    .select(*key_cols)
-    small = keyed.join(eligible, key_cols)
+    small = sized.filter((F.col("__n") > 1) & (F.col("__n") <= bucket_cap))
     x = small.select(*key_cols, F.col("id").alias("id_a"),
                      *[F.col(c).alias(f"{c}_a") for c in extra])
     y = small.select(*key_cols, F.col("id").alias("id_b"),
                      *[F.col(c).alias(f"{c}_b") for c in extra])
-    out = x.join(y, key_cols).filter(F.col("id_a") < F.col("id_b"))
+    # merge hint: a runtime switch to a broadcast join would add a
+    # broadcast job and drop the partitioning the window already paid for
+    out = x.join(y.hint("merge"), key_cols).filter(F.col("id_a") < F.col("id_b"))
     if pair_filter is not None:
         out = out.filter(pair_filter)
     if pair_project is not None:
@@ -253,8 +272,8 @@ def _finalize_pairs(out: DataFrame, *cached: DataFrame,
     """Materialize the (small) verified-pairs result and release the
     operator's internal caches.
 
-    The LSH operators persist intermediates (signature tables, the
-    exact-dup group map) consumed by several downstream joins; left
+    Some pair operators persist intermediates consumed by several
+    downstream joins (ngram's shingle table, the SRP vectors); left
     persisted, repeated calls in a long-lived session accumulate
     cached blocks until eviction pressure degrades the very joins the
     caches speed up.  ``localCheckpoint(eager=True)`` cuts the result
@@ -283,80 +302,80 @@ def _finalize_pairs(out: DataFrame, *cached: DataFrame,
 def _collapse_exact_groups(df: DataFrame, text_col: str, id_col: str):
     """Exact-duplicate collapse pre-pass shared by the LSH operators.
 
-    One md5 hash-agg keeps one representative per byte-identical group,
-    so the heavy LSH stages never see the boilerplate mass-duplicates
-    (cookie walls, 404 templates) that create degenerate buckets.
-    Returns (docs, groups): docs = (id, __text) one representative per
-    group; groups = persisted (id, __g) membership map.
+    One hash exchange on md5(text) — an explicit-width ``repartition``
+    (fan_out's 2× default parallelism) that AQE does not coalesce, so
+    it is also the fan-out ahead of the CPU-heavy signature stage
+    instead of a second shuffle of every text — then two frame-less
+    windows over the same partitioning give every row its group's
+    representative (the minimum id) and size.  The heavy LSH stages
+    see only the representatives, never the boilerplate
+    mass-duplicates (cookie walls, 404 templates) that create
+    degenerate buckets.
+
+    Returns (docs, members): docs = (id, __text), one representative
+    per group; members = (__rep, __member), one row per member of each
+    group of two or more (the representative included).  NULL texts
+    share the NULL md5 and form one group like any other.  ``members``
+    is not cached: its consumers in _expand_group_pairs sit in the same
+    query and read one reused exchange of narrow (id, md5) rows.
     """
-    hashed = df.select(F.col(id_col).alias("id"),
-                       F.col(text_col).alias("__text")) \
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("__g")
+    ranked = (
+        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text"))
         .withColumn("__g", F.md5("__text"))
-    # the collapse groupBy IS the fan-out: its shuffle spreads the
-    # (one representative text per group) output over
-    # spark.sql.shuffle.partitions, so an explicit repartition
-    # ahead of it would just shuffle every text twice
-    from ..plans.materialize import cache_intermediate
-
-    groups = cache_intermediate(hashed.select("id", "__g"),
-                                "exact_collapse_groups")
-    docs = (
-        hashed.groupBy("__g")
-        .agg(F.min_by(F.struct("id", "__text"), F.col("id")).alias("__r"))
-        .select(F.col("__r.id").alias("id"),
-                F.col("__r.__text").alias("__text"))
+        .repartition(df.sparkSession.sparkContext.defaultParallelism * 2,
+                     "__g")
+        .withColumn("__rep", F.min("id").over(w))
+        .withColumn("__gn", F.count(F.lit(1)).over(w))
     )
-    return docs, groups
+    docs = ranked.filter(F.col("id") == F.col("__rep")).select("id", "__text")
+    # the explicit non-null id keeps the member map's plan the same for
+    # the left joins and the inner self-join (which would infer it), so
+    # all three share one broadcast
+    members = ranked.filter((F.col("__gn") > 1) & F.col("id").isNotNull()) \
+        .select("__rep", F.col("id").alias("__member"))
+    return docs, members
 
 
-def _expand_group_pairs(rep_pairs: DataFrame, groups: DataFrame,
+def _expand_group_pairs(rep_pairs: DataFrame, members: DataFrame,
                         value_col: str, within_value) -> DataFrame:
     """Re-expand exact-dup groups into the pair-level output.
 
     Within-group pairs get ``within_value`` (J=1.0 / Hamming=0 by
-    definition); cross-group pairs inherit the representative pair's
-    value (identical texts ⇒ identical signatures, so this is exact).
-    Pair-level output is inherently quadratic in group size; at 10^12
-    rows keep the (id, group) map and rep_pairs instead (this expansion
-    exists so the operator's OUTPUT is the same set a naive engine
-    would produce, which is what the exact oracles check).
+    definition) from one self-join of ``members`` on the
+    representative; cross-group pairs inherit the representative
+    pair's value (identical texts ⇒ identical signatures, so this is
+    exact) through two left joins against the same map.  A singleton's
+    representative has no row in ``members`` and expands to itself via
+    the coalesce fallback, so every rep id matches exactly once per
+    side.  On a mostly-unique corpus ``members`` is tiny, and all three
+    joins build from one broadcast of it.
 
-    r11 plan shape (guide §3.1): the joins run against the
-    NON-SINGLETON groups only — a singleton's representative expands
-    to itself, which the left-join + coalesce fallback supplies
-    without touching any table.  On a mostly-unique corpus the dup
-    tables are tiny (110 rows vs the 50k-row full map at sf1.0), so
-    the four shuffled expansion joins become two broadcastable left
-    joins against the 646k-row simhash rep_pairs.  The expansion
-    SEMANTICS are unchanged: every rep id matched exactly once per
-    side before (inner join on the full map), and matches exactly
-    once now (dup-table hit, or the coalesce identity fallback).
+    Pair-level output is inherently quadratic in group size; at 10^12
+    rows keep ``members`` and rep_pairs instead (this expansion exists
+    so the operator's OUTPUT is the same set a naive engine would
+    produce, which is what the exact oracles check).
     """
-    sizes = groups.groupBy("__g").agg(F.count("*").alias("__gn"))
-    dup_members = (groups.join(sizes.filter(F.col("__gn") > 1), "__g")
-                   .select("id", "__g"))
-    reps = dup_members.groupBy("__g").agg(F.min("id").alias("__rep"))
-    rep_members = dup_members.join(reps, "__g") \
-        .select(F.col("__rep"), F.col("id").alias("__member"))
+    ga, gb = members.alias("ga"), members.alias("gb")
     within = (
-        dup_members.alias("ga").join(dup_members.alias("gb"), "__g")
-        .filter(F.col("ga.id") < F.col("gb.id"))
-        .select(F.col("ga.id").alias("id_a"), F.col("gb.id").alias("id_b"),
+        ga.join(gb, F.col("ga.__rep") == F.col("gb.__rep"))
+        .filter(F.col("ga.__member") < F.col("gb.__member"))
+        .select(F.col("ga.__member").alias("id_a"),
+                F.col("gb.__member").alias("id_b"),
                 F.lit(within_value).alias(value_col))
     )
+    ma, mb = members.alias("ma"), members.alias("mb")
     cross = (
-        rep_pairs
-        .join(rep_members.select(F.col("__rep").alias("id_a"),
-                                 F.col("__member").alias("__m_a")),
-              "id_a", "left")
-        .join(rep_members.select(F.col("__rep").alias("id_b"),
-                                 F.col("__member").alias("__m_b")),
-              "id_b", "left")
-        .select(F.least(F.coalesce("__m_a", "id_a"),
-                        F.coalesce("__m_b", "id_b")).alias("id_a"),
-                F.greatest(F.coalesce("__m_a", "id_a"),
-                           F.coalesce("__m_b", "id_b")).alias("id_b"),
-                value_col)
+        rep_pairs.alias("p")
+        .join(ma, F.col("p.id_a") == F.col("ma.__rep"), "left")
+        .join(mb, F.col("p.id_b") == F.col("mb.__rep"), "left")
+        .select(F.coalesce("ma.__member", "p.id_a").alias("__x"),
+                F.coalesce("mb.__member", "p.id_b").alias("__y"),
+                F.col(f"p.{value_col}").alias(value_col))
+        .select(F.least("__x", "__y").alias("id_a"),
+                F.greatest("__x", "__y").alias("id_b"), value_col)
     )
     return cross.unionByName(within)
 
@@ -377,20 +396,25 @@ def minhash_near_duplicates(
 ) -> DataFrame:
     """Near-duplicate pairs: (id_a, id_b, jaccard) with jaccard ≥ threshold.
 
-    Plan shape (all joins/aggs, no array collection anywhere):
+    Plan shape (no array collection anywhere; one Spark query):
 
-    0. exact-dup collapse — one md5 hash-agg keeps one representative
-       per byte-identical group.  On a Common-Crawl corpus the heavy
-       LSH stages then never see the boilerplate mass-duplicates that
-       create degenerate buckets; member pairs are re-expanded from the
-       group table at the end (within-group J = 1.0 by definition,
-       cross-group pairs inherit the representative pair's jaccard).
-    1. one narrow stage builds hashed shingles + signature per doc
-       (builtin Catalyst only);
-    2. banding explode → bucket-size count agg → cap filter →
-       self-join (capped_bucket_pairs: no collect_set, no per-reducer
-       arrays, dropped buckets reported via ``metrics``);
-    3. exact shingle-Jaccard verify join on the surviving candidates.
+    0. exact-dup collapse (_collapse_exact_groups) — one md5 exchange
+       keeps one representative per byte-identical group, so the LSH
+       stages never see the boilerplate mass-duplicates that create
+       degenerate buckets; member pairs are re-expanded at the end
+       (within-group J = 1.0 by definition, cross-group pairs inherit
+       the representative pair's jaccard);
+    1. one narrow stage builds hashed shingles + signature per doc and
+       explodes the bands (builtin Catalyst only);
+    2. capped_bucket_pairs: one windowed exchange sizes and self-joins
+       the band buckets, dropped buckets reported via ``metrics``;
+    3. the exact shingle-Jaccard verify runs as its map-side
+       ``pair_filter`` on the shingle hashes each band row carries, so
+       only verified (id_a, id_b, jaccard) rows reach the pair-dedupe
+       exchange and no join back to the signatures is needed.  The
+       price: each band row carries its doc's shingle hashes (``bands``
+       copies through the band exchange), and a pair sharing several
+       bands is verified once per shared band.
 
     Scales linearly in corpus size for corpora whose NEAR-duplicate
     cluster sizes are bounded by ``bucket_cap`` (exact duplicates are
@@ -401,7 +425,7 @@ def minhash_near_duplicates(
     rows_per_band = num_hashes // bands
 
     if collapse_exact:
-        docs, groups = _collapse_exact_groups(df, text_col, id_col)
+        docs, members = _collapse_exact_groups(df, text_col, id_col)
     else:
         docs = fan_out(df.select(F.col(id_col).alias("id"),
                                  F.col(text_col).alias("__text")))
@@ -409,8 +433,8 @@ def minhash_near_duplicates(
     sigs = (
         docs.select(
             "id",
-            # hashed distinct shingles: verify-join Jaccard on bigints is
-            # ~5× cheaper than on the original shingle strings, and the
+            # hashed distinct shingles: Jaccard on bigints is ~5×
+            # cheaper than on the original shingle strings, and the
             # signature needs only the hashes anyway
             F.array_distinct(
                 F.transform(word_shingles(F.col("__text"), shingle_k),
@@ -420,15 +444,9 @@ def minhash_near_duplicates(
         .withColumn("sig", minhash_signature(F.col("shingles"), num_hashes, seed,
                                              pre_hashed=True))
     )
-    from ..plans.materialize import cache_intermediate
-
-    # consumed 3x below (banding + both verify sides); at 10^12 rows
-    # set SPARK_GRAFT_SPILL_DIR so the signatures land in a written
-    # table instead of the executor cache (plans/materialize.py)
-    sigs = cache_intermediate(sigs, "minhash_sigs")
 
     banded = sigs.select(
-        "id",
+        "id", "shingles",
         F.explode(
             F.transform(
                 F.sequence(F.lit(0), F.lit(bands - 1)),
@@ -446,27 +464,20 @@ def minhash_near_duplicates(
                 ),
             )
         ).alias("bb"),
-    ).select("id", "bb.band", "bb.bucket")
+    ).select("id", "shingles", "bb.band", "bb.bucket")
 
-    candidates = capped_bucket_pairs(banded, ["band", "bucket"], bucket_cap,
-                                     metrics=metrics)
-
-    left = sigs.select(F.col("id").alias("id_a"), F.col("shingles").alias("sh_a"))
-    right = sigs.select(F.col("id").alias("id_b"), F.col("shingles").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter  # |A∪B| without a 2nd array op
-    rep_pairs = (
-        candidates.join(left, "id_a").join(right, "id_b")
-        .withColumn("jaccard", F.round(inter / union, 4))
-        .filter(F.col("jaccard") >= min_jaccard)
-        .select("id_a", "id_b", "jaccard")
-    )
-    if not collapse_exact:
-        return _finalize_pairs(rep_pairs, sigs,
-                               materialize=materialize)
-    return _finalize_pairs(
-        _expand_group_pairs(rep_pairs, groups, "jaccard", 1.0),
-        sigs, groups, materialize=materialize)
+    inter = F.size(F.array_intersect("shingles_a", "shingles_b"))
+    # |A∪B| without a 2nd array op
+    union = F.size("shingles_a") + F.size("shingles_b") - inter
+    jaccard = F.round(inter / union, 4)
+    rep_pairs = capped_bucket_pairs(banded, ["band", "bucket"], bucket_cap,
+                                    metrics=metrics,
+                                    extra_cols=["shingles"],
+                                    pair_filter=jaccard >= min_jaccard,
+                                    pair_project=[jaccard.alias("jaccard")])
+    if collapse_exact:
+        rep_pairs = _expand_group_pairs(rep_pairs, members, "jaccard", 1.0)
+    return _finalize_pairs(rep_pairs, materialize=materialize)
 
 
 def ngram_jaccard_pairs(
@@ -907,17 +918,8 @@ def simhash_signatures(df: DataFrame, text_col: str = "text",
         F.col(id_col).alias("id"), simhash64(F.col(text_col)).alias("simhash"))
 
 
-# below this corpus size the single-band plan (r=1: 8 tables × 8-bit
-# keys) is used: worst-case candidate volume n²/256 per table stays
-# ≤ ~12M rows total at n=20k, far under shuffle pain, and banding
-# explodes 3.5× fewer rows than the 28 pair-tables (the r3 bench paid
-# +13% warm for pair-tables on a 5k-doc corpus that never needed
-# them).  Both regimes are pigeonhole-exact for Hamming ≤ n_bands − r.
-_SIMHASH_SMALL_N = 20_000
-
-
 def _simhash_band_plan(max_hamming: int, max_tables: int = 128,
-                       max_r: int = 4, n_docs: Optional[int] = None):
+                       max_r: int = 4):
     """Manku-style band-combination plan for exact Hamming-≤h recall.
 
     Split the 64 bits into ``n_bands`` equal bands.  A pair at Hamming
@@ -934,11 +936,11 @@ def _simhash_band_plan(max_hamming: int, max_tables: int = 128,
     r is chosen as the largest value with r ≤ n_bands − h,
     C(n_bands, r) ≤ max_tables and r ≤ max_r.
 
-    r4: when ``n_docs`` is known and small (≤ _SIMHASH_SMALL_N) the
-    plan stays at r=1 — single-band tables are already lossless
-    (h ≤ n_bands − 1) and the wider key space buys nothing at toy
-    scale while tripling the banding-explode volume.  Recovers the
-    r3 +13% warm regression without giving up the at-scale guarantee.
+    The plan does not depend on the corpus size: picking single-band
+    tables for small corpora would need a count before planning (an
+    extra Spark job), and with the keys built as one lambda expression
+    (simhash_near_duplicates) the pair-table plan costs the same as
+    the single-band one at 1,000 docs.
     """
     from itertools import combinations
     from math import comb
@@ -947,8 +949,6 @@ def _simhash_band_plan(max_hamming: int, max_tables: int = 128,
     while n_bands <= max_hamming and n_bands < 64:
         n_bands *= 2
     width = 64 // n_bands
-    if n_docs is not None and n_docs <= _SIMHASH_SMALL_N:
-        max_r = 1
     r = 1
     while (r + 1 <= max_r and r + 1 <= n_bands - max_hamming
            and comb(n_bands, r + 1) <= max_tables):
@@ -971,17 +971,18 @@ def simhash_near_duplicates(df: DataFrame, text_col: str = "text",
     at ≥10⁶ docs):
 
     0. exact-dup collapse — identical texts are Hamming-0 pairs and
-       the single biggest bucket flooders; one md5 hash-agg keeps one
-       representative per group (shared with minhash, re-expanded at
-       the end);
+       the single biggest bucket flooders; one md5 exchange keeps one
+       representative per group (_collapse_exact_groups, shared with
+       minhash, re-expanded at the end);
     1. Manku band-pair tables — see _simhash_band_plan: for
        Hamming ≤ 6 that is C(8,2)=28 tables keyed on 16 intact bits
        (65,536-value key space), still pigeonhole-exact, so the output
        EQUALS the brute-force all-pairs result, which is what the
        DuckDB oracle checks;
-    2. candidates via capped_bucket_pairs (count-agg + self-join — no
-       collect_set, degenerate buckets dropped with a REPORTED metric);
-    3. exact bit_count verify on the surviving candidates.
+    2. candidates via capped_bucket_pairs (one windowed exchange +
+       self-join — no collect_set, degenerate buckets dropped with a
+       REPORTED metric);
+    3. exact bit_count verify as that self-join's map-side filter.
 
     Measured caveat (round-9 soak, BENCH_dedup_scale_r09.json): on a
     shared-vocabulary corpus the simhash BIT POPULATION is biased
@@ -994,74 +995,43 @@ def simhash_near_duplicates(df: DataFrame, text_col: str = "text",
     Prefer minhash when recall matters; simhash's advantage is the
     8-byte fingerprint.
 
-    The band plan adapts to corpus size: single-band tables below
-    _SIMHASH_SMALL_N docs, Manku pair-tables above — both lossless,
-    same output either way.  The size comes from counting the
-    PERSISTED signature table (computed once, needed anyway), not the
-    raw input — a df.count() on arbitrary upstream lineage (e.g. text
-    straight out of the extraction UDF) would re-execute that whole
-    lineage as an extra job.
+    The whole call is one Spark query with no sizing probe: the band
+    plan does not depend on the corpus size (_simhash_band_plan), and
+    the signatures feed only the banding, so nothing is cached.
     """
     if collapse_exact:
-        docs, groups = _collapse_exact_groups(df, text_col, id_col)
-        sigs = simhash_signatures(docs, text_col="__text", id_col="id")
+        docs, members = _collapse_exact_groups(df, text_col, id_col)
+        sigs = docs.select(
+            "id", _make_simhash_udf()(F.col("__text")).alias("simhash"))
     else:
         sigs = simhash_signatures(df, text_col, id_col)
-    from ..plans.materialize import cache_intermediate
-
-    sigs = cache_intermediate(sigs, "simhash_sigs")
-    # materializes the signature UDF exactly once; banding + the
-    # candidate self-join below all reuse the cached (id, simhash)
-    # rows (narrow: 2 longs/row)
-    n_docs = sigs.count()
-    width, combos = _simhash_band_plan(max_hamming, n_docs=n_docs)
-    mask = (1 << width) - 1
-
-    def band_key(i: int) -> Column:
-        return F.shiftrightunsigned(F.col("simhash"), i * width) \
-            .bitwiseAND(F.lit(mask))
-
-    def combo_key(combo) -> Column:
-        # concatenated intact-band bits: key = Σ band_key(b_p) << p·width
-        key = band_key(combo[0])
-        for p, i in enumerate(combo[1:], start=1):
-            key = key.bitwiseOR(F.shiftleft(band_key(i), p * width))
-        return key
-
-    keyed = sigs.select(
-        "id", "simhash",
-        F.explode(F.array(*[
-            F.struct(F.lit(t).alias("band"), combo_key(c).alias("key"))
-            for t, c in enumerate(combos)
-        ])).alias("bb"),
-    ).select("id", "simhash", "bb.band", "bb.key")
-    # no second persist needed: keyed recomputes as a narrow explode
-    # of the already-cached sigs rows, so the multi-consumer self-join
-    # never re-runs the SimHash UDF
+    width, combos = _simhash_band_plan(max_hamming)
+    # table t keys on the intact-band bits of combos[t], concatenated:
+    # Σ_p ((simhash >>> b_p·width) & mask) << p·width.  One lambda over
+    # a literal combo array keeps the expression the same size whatever
+    # the table count: with 28 unrolled struct expressions a call spent
+    # ~0.4 s more in driver-side planning than with 8 (1,000 docs,
+    # local[2]; the Spark jobs took the same time)
+    combos_sql = ", ".join(f"array({', '.join(map(str, c))})" for c in combos)
+    keys = F.expr(
+        f"transform(array({combos_sql}), c -> aggregate("
+        f"sequence(0, size(c) - 1), 0L, (k, p) -> k | shiftleft("
+        f"shiftrightunsigned(simhash, c[p] * {width}) & {(1 << width) - 1},"
+        f" p * {width})))")
+    keyed = sigs.select("id", "simhash",
+                        F.posexplode(keys).alias("band", "key"))
 
     hamming = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
     # the popcount verify needs only the two carried simhash scalars,
     # so it runs as the map-side pair_filter BEFORE the pair-dedupe
-    # exchange (r11: the biased-bit buckets emit 87M raw candidate
-    # rows at sf1.0 that verify down to 646k pairs — shuffling the
-    # unverified volume through dropDuplicates was the operator's
-    # dominant cost).  Identical output: the predicate is a
-    # deterministic function of the pair, so filter∘distinct ≡
-    # distinct∘filter.
-    candidates = capped_bucket_pairs(keyed, ["band", "key"], bucket_cap,
-                                     metrics=metrics,
-                                     extra_cols=["simhash"],
-                                     pair_filter=hamming <= max_hamming,
-                                     pair_project=[hamming.alias("hamming")])
-    # the popcount already ran as pair_filter and rides the dedupe as
-    # the projected 4-byte hamming (not the two 8-byte signatures) —
-    # functionally dependent on the pair, so the dedupe survivor is
-    # deterministic and the output identical (same-window A/B:
-    # 7.61 -> 6.92 s at sf1.0)
-    rep_pairs = candidates.select("id_a", "id_b", "hamming")
-    if not collapse_exact:
-        return _finalize_pairs(rep_pairs, sigs,
-                               materialize=materialize)
-    return _finalize_pairs(
-        _expand_group_pairs(rep_pairs, groups, "hamming", 0),
-        sigs, groups, materialize=materialize)
+    # exchange (the biased-bit buckets emit 87M raw candidate rows at
+    # sf1.0 that verify down to 646k pairs), and the 4-byte hamming
+    # rides the dedupe instead of the two 8-byte signatures
+    rep_pairs = capped_bucket_pairs(keyed, ["band", "key"], bucket_cap,
+                                    metrics=metrics,
+                                    extra_cols=["simhash"],
+                                    pair_filter=hamming <= max_hamming,
+                                    pair_project=[hamming.alias("hamming")])
+    if collapse_exact:
+        rep_pairs = _expand_group_pairs(rep_pairs, members, "hamming", 0)
+    return _finalize_pairs(rep_pairs, materialize=materialize)

@@ -347,9 +347,9 @@ def cosine_near_duplicate_pairs(df: DataFrame, threshold: float = 0.95,
     rides the explode/candidate stages, and the verify step joins the
     float arrays back BY ID from the narrow persisted vector table —
     vectors are stored once and never shuffle through the pair-dedupe.
-    At that scale set ``SPARK_GRAFT_SPILL_DIR`` and the vector + bucket
-    intermediates are written tables instead of executor cache
-    (plans/materialize.py — the knob every LSH operator shares).
+    At that scale set ``SPARK_GRAFT_SPILL_DIR`` and the vector
+    intermediate is a written table instead of executor cache
+    (plans/materialize.py).
     Measured at 4×/16× bench scale with planted ground truth in
     BENCH_dedup_scale_r10.json: clone recall 1.0, sub-linear wall,
     and — new in round 10 — NEAR-THRESHOLD recall on pairs planted at
@@ -404,12 +404,14 @@ def cosine_near_duplicate_pairs(df: DataFrame, threshold: float = 0.95,
     vecs = cache_intermediate(fan_out(df.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("v")
     )).withColumn("__nrm", _norm(F.col("v"))), "srp_vectors")
-    buckets = cache_intermediate(vecs.select(
+    # not cached: capped_bucket_pairs reads it once, through one
+    # windowed exchange (twice when ``metrics`` asks for drop counts)
+    buckets = vecs.select(
         "id",
         F.posexplode(
             srp_multi_bucket_udf(dim, bits, tables, seed)(F.col("v"))
         ).alias("table", "bucket"),
-    ), "srp_buckets")  # consumed 3× in capped_bucket_pairs (sizes + two sides)
+    )
 
     candidates = capped_bucket_pairs(buckets, ["table", "bucket"],
                                      bucket_cap, metrics=metrics)
@@ -425,7 +427,6 @@ def cosine_near_duplicate_pairs(df: DataFrame, threshold: float = 0.95,
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
     )
-    # same cache-release contract as the dedup LSH operators: the two
-    # persisted intermediates would otherwise pin blocks for the
-    # session lifetime on every call (_finalize_pairs docstring)
-    return _finalize_pairs(out, vecs, buckets, materialize=materialize)
+    # release the persisted vectors, which would otherwise pin blocks
+    # for the session lifetime on every call (_finalize_pairs docstring)
+    return _finalize_pairs(out, vecs, materialize=materialize)

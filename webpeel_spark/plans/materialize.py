@@ -1,8 +1,8 @@
 """Intermediate materialization: executor cache vs written table.
 
-The LSH family (minhash / simhash signatures, the SRP vector + bucket
-tables, the exact-collapse group map) computes an intermediate once
-and reads it from several downstream joins.  On a single machine and
+Some pair operators (the n-gram shingle table, the SRP vector table)
+compute an intermediate once and read it from several downstream
+joins.  On a single machine and
 at bench scale ``persist()`` (MEMORY_AND_DISK) is the right tool; at
 the 10^12-row end every operator docstring has carried the same note —
 "swap the persist for a written table" — because executor block-store

@@ -32,6 +32,10 @@ def url_host(col: str = "url"):
     return F.lower(F.parse_url(F.col(col), F.lit("HOST")))
 
 
+# physical plan nodes whose output width is known only by executing them
+_RUNTIME_WIDTH_NODES = ("AdaptiveSparkPlan", "Exchange", "InMemoryTableScan")
+
+
 def fan_out(df: DataFrame, partitions: Optional[int] = None) -> DataFrame:
     """Ensure enough partitions ahead of a CPU-heavy narrow stage.
 
@@ -41,11 +45,21 @@ def fan_out(df: DataFrame, partitions: Optional[int] = None) -> DataFrame:
     explicit round-robin repartition is also the correct cluster
     pattern when a cheap scan feeds an expensive per-row stage (shuffle
     cost ≪ stage cost).  Explicit numPartitions is NOT coalesced by AQE.
+
+    The width is decided without running a Spark job.  Only a plan
+    with no exchange and no cached relation has a partition count the
+    driver knows from planning alone (file splits, local rows, a
+    checkpoint's blocks).  Asking any other plan for its partitions
+    executes its upstream stages as a hidden job (AQE fixes shuffle
+    widths only at run time), which the real query then runs again; so
+    such an input is repartitioned without asking.
     """
     spark = df.sparkSession
     if partitions is None:
         partitions = spark.sparkContext.defaultParallelism * 2
-    if df.rdd.getNumPartitions() >= partitions:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    if (not any(node in plan for node in _RUNTIME_WIDTH_NODES)
+            and df.rdd.getNumPartitions() >= partitions):
         return df
     return df.repartition(partitions)
 
